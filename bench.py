@@ -184,7 +184,7 @@ def bench_frontier_dedup(spark, sf: float, n_override: int | None = None) -> dic
         # the timed window (same hygiene as the corpus pre-materialization
         # in bench_crawl) so the measurement is the per-wave dedup merge,
         # not the one-time filter bootstrap.
-        frontier._ensure_blobs_current()
+        frontier.seen.ensure_current()
         # candidate batch: n rows, half overlap with existing
         cand = spark.range(n // 2, n + n // 2).select(
             F.concat(
@@ -239,7 +239,9 @@ def bench_dedup_vs_frontier_size(
     """
     from pyspark.sql import functions as F
 
+    from kermit_spark.bloom import BloomSpec
     from kermit_spark.catalog import SnapshotCatalog
+    from kermit_spark.cuckoo import CuckooSpec
     from kermit_spark.frontier import Frontier
 
     def urls(lo: int, hi: int):
@@ -319,7 +321,8 @@ def bench_evict(spark, sizes=(2_000_000, 8_000_000), evict_hosts: int = 25) -> d
             try:
                 fr = Frontier(
                     SnapshotCatalog(spark, root), num_partitions=32,
-                    seen_filter=mode, bloom_min_frontier=0, bloom_commit_every=10**9,
+                    seen_spec=CuckooSpec() if mode == "cuckoo" else BloomSpec(),
+                    bloom_min_frontier=0, bloom_commit_every=10**9,
                 )
                 fr.init(urls(0, n))
                 fr.schedule(urls(n, n + 10_000), wave=1)  # warm the driver blobs
@@ -363,8 +366,8 @@ def bench_big_frontier(
 
       * the default BloomSpec (sized for ~100k keys/partition) SATURATES at
         10M rows — the first flush epoch must detect est_fpp >
-        bloom_max_fpp and fire the auto-grow rebuild
-        (frontier._grow_and_rebuild), after which the prefilter is healthy
+        BLOOM_MAX_FPP and fire the auto-grow rebuild
+        (seen.SeenSet._grow), after which the prefilter is healthy
         again: wave 1 pays the documented one-time rebuild, later waves
         are the steady state the ≥100k-URLs/s target applies to;
       * the dedup merge (Bloom prefilter + reverse-pruned anti-join +
@@ -382,6 +385,7 @@ def bench_big_frontier(
     """
     from pyspark.sql import functions as F
 
+    from kermit_spark.bloom import BloomSpec
     from kermit_spark.catalog import SnapshotCatalog
     from kermit_spark.frontier import (
         Frontier, Limit, Politeness, dequeue, plan_host_partitions,
@@ -419,22 +423,21 @@ def bench_big_frontier(
         # it at scale, not just the toy equivalence test)
         kwargs = {}
         if driver_blob_max_bytes is not None:
-            from kermit_spark.bloom import BloomSpec
-
             kwargs["driver_blob_max_bytes"] = driver_blob_max_bytes
             out["driver_blob_max_bytes"] = driver_blob_max_bytes
-            # cogroup mode has no driver popcount, so the saturation
-            # auto-grow cannot fire — pre-size the blobs for the known
-            # frontier instead (the posture a real beyond-driver deployment
-            # plans for: spec sized from expected keys/partition). Size for
+            # cogroup mode reads filter health through a distributed stats
+            # pass, so its auto-grow is a whole O(frontier) rebuild of a
+            # beyond-driver set — pre-size the blobs for the known frontier
+            # instead (the posture a real beyond-driver deployment plans
+            # for: spec sized from expected keys/partition). Size for
             # the HOT partition, not the uniform mean: ~30% of this leg's
             # URLs share one host and host-salting puts them all in ONE
             # partition — a mean-sized spec would leave that partition's
             # filter ~7x undersized with no grow to save it (review
             # finding). Uniform hot-sized blobs cost extra bytes on cold
-            # partitions, which is exactly what the per-partition
-            # m_by_partition sizing avoids in driver mode.
-            kwargs["bloom_spec"] = BloomSpec.for_capacity(int(n * 0.3 * 1.3))
+            # partitions, which is exactly what the per-partition sizing
+            # of a grow avoids.
+            kwargs["seen_spec"] = BloomSpec.for_capacity(int(n * 0.3 * 1.3))
         if not exact_dedup:
             # trust-the-filter mode (Heritrix BloomUriUniqFilter
             # semantics): probe-positive == seen, no anti-join — the
@@ -447,12 +450,12 @@ def bench_big_frontier(
         fr.init(urls(0, n))
         out["init_sec"] = round(time.time() - t0, 2)
         t0 = time.time()
-        blobs = fr._ensure_blobs_current()  # steady-state posture (None => cogroup mode)
+        fr.seen.ensure_current()  # steady-state posture (None => cogroup mode)
         out["blob_build_sec"] = round(time.time() - t0, 2)
-        out["cogroup_mode"] = blobs is None
+        out["cogroup_mode"] = fr.seen.held is None
         pre = fr.seen_fill_stats()
         out["bloom_before"] = {
-            "m_bits": fr.bloom_spec.m_bits,
+            "m_bits": fr.seen.spec.m_bits,
             "worst_fpp": round(max(s["est_fpp"] for s in pre.values()), 4),
             "max_fill": round(max(s["fill_ratio"] for s in pre.values()), 4),
         }
@@ -485,7 +488,7 @@ def bench_big_frontier(
                 }
 
             res = _timed_leg(leg)
-            res["m_bits_after"] = fr.bloom_spec.m_bits  # shows WHEN growth fired
+            res["m_bits_after"] = fr.seen.spec.m_bits  # shows WHEN growth fired
             wave_rows.append(res)
             _log(f"big-frontier wave {w}: {res['sec']}s "
                  f"({res['new_scheduled']} new, {res['urls_per_sec']} URLs/s, "
@@ -497,7 +500,7 @@ def bench_big_frontier(
         )
         post = fr.seen_fill_stats()
         out["bloom_after"] = {
-            "m_bits": fr.bloom_spec.m_bits,
+            "m_bits": fr.seen.spec.m_bits,
             "worst_fpp": round(max(s["est_fpp"] for s in post.values()), 6),
             "max_fill": round(max(s["fill_ratio"] for s in post.values()), 4),
         }

@@ -67,6 +67,7 @@ from .frontier import (
 from .functions.urls import clean_urls, host_of
 from .parse import discover_links, parse_documents
 from .robots import robots_gate, robots_rules_from_fetch, sitemap_candidates_from_fetch
+from .seen import SeenSpec
 
 DOCUMENTS_TABLE = "documents"
 ROBOTS_TABLE = "robots"
@@ -202,12 +203,13 @@ class CrawlConfig:
     # wave (min 1). The window is the wave-period assumption that converts
     # delay seconds into batch budget; 0 disables Crawl-delay handling.
     politeness_window_s: float = 60.0
-    bloom: BloomSpec = field(default_factory=BloomSpec)
-    # URL-seen probe structure: 'bloom' (default; smallest, no deletions —
-    # matches reference semantics) or 'cuckoo' (deletable fingerprints:
-    # Frontier.evict removes keys in place instead of forcing a blob
-    # rebuild — pick this when running re-crawl/aging policies)
-    seen_filter: str = "bloom"
+    # URL-seen set: the spec's type picks the probe structure — BloomSpec
+    # (default; smallest, no deletions — matches reference semantics) or
+    # CuckooSpec (deletable fingerprints: Frontier.evict removes keys in
+    # place instead of forcing a blob rebuild — pick it when running
+    # re-crawl/aging policies); its size is the starting per-partition
+    # capacity, which grows on saturation
+    seen_spec: SeenSpec = field(default_factory=BloomSpec)
     # True (default) = the URL-seen probe is a PREFILTER and the exact
     # anti-join is membership truth (reference parity: never lose a URL).
     # False = trust-the-filter dedup (Heritrix BloomUriUniqFilter
@@ -409,8 +411,7 @@ class Crawler:
         self.fetcher = fetcher
         self.config = config or CrawlConfig()
         self.frontier = Frontier(
-            catalog, self.config.num_partitions, self.config.bloom,
-            seen_filter=self.config.seen_filter,
+            catalog, self.config.num_partitions, self.config.seen_spec,
             exact_dedup=self.config.exact_dedup,
         )
         # driver-side cache of hosts KNOWN to have robots state. Filled
@@ -1664,8 +1665,8 @@ class Crawler:
 
     def evict(self, match) -> int:
         """Forget matching URLs (rows removed AND un-seen → re-discoverable;
-        Frontier.evict — cuckoo seen_filter deletes fingerprints in place,
-        Bloom pays one epoch-tracked blob rebuild)."""
+        Frontier.evict — a CuckooSpec seen set deletes fingerprints in
+        place, Bloom pays one epoch-tracked blob rebuild)."""
         return self.frontier.evict(match)
 
     def recrawl(self, match) -> int:
@@ -1784,10 +1785,7 @@ class Crawler:
                     DOCUMENTS_TABLE, empty, stale, align=False
                 )
         # reset driver-held seen-filter state; next wave re-syncs/rebuilds
-        fr = self.frontier
-        fr._blobs = None
-        fr._blobs_epoch = -1
-        fr._blob_counts = {}
+        self.frontier.seen.reset()
         return target
 
     def documents(self) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Partitioned cuckoo-filter URL-seen variant — supports deletion.
+"""Partitioned cuckoo-filter URL-seen variant — the cuckoo codec; supports
+deletion.
 
 The north rule names "bloom/cuckoo URL-seen (cuckoo fallback for deletions)".
 The engine's default is the Bloom set (bloom.py): the reference's
@@ -6,9 +7,15 @@ The engine's default is the Bloom set (bloom.py): the reference's
 (/root/reference/src/kermit/QueueSystem.coffee:189-191), so nothing ever
 needs deletion and Bloom's smaller/simpler bitset wins. This module provides
 the cuckoo variant for deployments that DO evict (e.g. re-crawl policies that
-age URLs out of the seen-set), with the same partitioned-blob layout and the
-same prefilter contract (no false negatives for present keys; exactness via
-anti-join).
+age URLs out of the seen-set), picked with ``Frontier(seen_spec=CuckooSpec(...))``.
+:class:`CuckooFilter` implements the same membership interface as
+bloom.BloomFilter, so it rides the same Spark layer (seen.py), the same
+partitioned-blob layout and the same prefilter contract (no false negatives
+for present keys; exactness via anti-join).
+
+Cuckoo blobs share the url_seen row layout with Bloom blobs: ``filter`` = the
+bucket table bytes, ``m_bits`` = n_buckets, and ``k_hashes = 0`` as the
+cuckoo marker (a Bloom filter always has k >= 1).
 
 Standard cuckoo filter (Fan et al., CoNEXT'14, public): 4-slot buckets,
 8-bit fingerprints, partial-key cuckoo hashing — bucket2 = bucket1 XOR
@@ -20,15 +27,16 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 _EMPTY = 0  # fingerprints are 1..255; 0 marks an empty slot
 _SLOTS = 4
 _MAX_KICKS = 500
+_MIN_BUCKETS = 32
+# health rule: the seen set grows a filter before its slot load passes this.
+# Inserts start failing near 95 % load; the smallest table (32 buckets)
+# never failed below 88 % in 1,500 random fills, where 16 buckets failed
+# at 75 % — hence the bucket floor
+CUCKOO_MAX_LOAD = 0.85
 
 
 @dataclass
@@ -39,7 +47,7 @@ class CuckooFilter:
 
     def __post_init__(self):
         # power-of-two buckets so the XOR trick stays in range
-        n = 1
+        n = _MIN_BUCKETS
         while n < self.n_buckets:
             n <<= 1
         self.n_buckets = n
@@ -90,6 +98,7 @@ class CuckooFilter:
         empty-slot placement in bucket1 then bucket2 handles ~everything at
         sane load factors; only keys finding both buckets full take the
         per-key cuckoo kick loop."""
+        self._own()
         fps = self._fingerprint(keys)
         b1s = self._bucket1(keys)
         b2s = self._alt_bucket(b1s, fps)
@@ -162,6 +171,7 @@ class CuckooFilter:
         standard cuckoo caveat; callers only delete keys they inserted.)
         Bulk-vectorized like insert: bucket1 pass, then bucket2 for the
         remainder."""
+        self._own()
         fps = self._fingerprint(keys)
         b1s = self._bucket1(keys)
         b2s = self._alt_bucket(b1s, fps)
@@ -174,27 +184,53 @@ class CuckooFilter:
         self.n_items -= removed
         return removed
 
-    # -- (de)serialization for catalog blobs -------------------------------
-
-    def to_bytes(self) -> bytes:
-        return self.table.tobytes()
+    # -- url_seen codec (the membership interface seen.py is written to) ----
 
     @classmethod
-    def from_bytes(cls, blob: bytes, n_buckets: int) -> "CuckooFilter":
-        f = cls(n_buckets)
-        f.table = np.frombuffer(blob, dtype=np.uint8).reshape(f.n_buckets, _SLOTS).copy()
-        f.n_items = int((f.table != _EMPTY).sum())
+    def decode(cls, buf: bytes, n_items: int, m_bits: int, k_hashes: int = 0) -> "CuckooFilter":
+        """A url_seen row's filter; shares ``buf`` (read-only) until the
+        first insert/delete copies it."""
+        f = cls.__new__(cls)
+        f.n_buckets, f.n_items = int(m_bits), int(n_items)
+        f.table = np.frombuffer(buf, dtype=np.uint8).reshape(f.n_buckets, _SLOTS)
         return f
 
+    def encode(self) -> tuple[bytes, int, int, int]:
+        return self.table.tobytes(), self.n_items, self.n_buckets, 0
 
-# ---------------------------------------------------------------------------
-# Partitioned-blob layer (frontier url_seen integration)
-#
-# Cuckoo blobs ride the SAME url_seen table layout as Bloom blobs
-# (bloom.BLOOM_SCHEMA): ``filter`` = the bucket table bytes, ``m_bits`` =
-# n_buckets, and ``k_hashes = 0`` as the cuckoo marker (a Bloom filter always
-# has k >= 1). That keeps the catalog, flush and collect plumbing shared.
-# ---------------------------------------------------------------------------
+    def _own(self) -> None:
+        if not self.table.flags.writeable:
+            self.table = self.table.copy()
+
+    @property
+    def m_bits(self) -> int:  # the url_seen column this codec fills
+        return self.n_buckets
+
+    @staticmethod
+    def capacity(m_bits: int) -> float:
+        """Keys a table of m_bits (= n_buckets) takes before its slot load
+        passes CUCKOO_MAX_LOAD."""
+        return CUCKOO_MAX_LOAD * m_bits * _SLOTS
+
+    def stats(self) -> dict:
+        """Read from the n_items counter (O(1), no table scan):
+        ``fill_ratio`` is the slot LOAD FACTOR, ``est_keys`` the occupied
+        slots, ``est_fpp`` the structural bound 2·SLOTS/2^8 — a cuckoo's
+        fp rate does not climb with fill the way a Bloom's does; inserts
+        start failing instead (see CUCKOO_MAX_LOAD)."""
+        slots = self.n_buckets * _SLOTS
+        return {
+            "n_items": self.n_items,
+            "m_bits": self.n_buckets,
+            "k_hashes": 0,
+            "fill_ratio": self.n_items / slots,
+            "est_keys": float(self.n_items),
+            "est_fpp": 2.0 * _SLOTS / 256.0,
+        }
+
+    @staticmethod
+    def saturated(stats: dict) -> bool:
+        return stats["fill_ratio"] > CUCKOO_MAX_LOAD
 
 
 @dataclass(frozen=True)
@@ -203,163 +239,12 @@ class CuckooSpec:
     load (4 slots/bucket)."""
 
     n_buckets: int = 1 << 17
+    # a full table refuses inserts: the seen set checks room before a fold
+    bounded = True
 
     @staticmethod
     def for_capacity(n_keys_per_partition: int) -> "CuckooSpec":
         return CuckooSpec(n_buckets=max(1 << 8, int(n_keys_per_partition / (_SLOTS * 0.95))))
 
-
-def _blob_row(p: int, f: CuckooFilter) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "p": [p],
-            "filter": [f.to_bytes()],
-            "n_items": [f.n_items],
-            "m_bits": [f.n_buckets],
-            "k_hashes": [0],
-        }
-    )
-
-
-def build_cuckoo(frontier: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """One cuckoo blob per partition from (p, url_hash) rows — the
-    O(frontier) rebuild path, distributed exactly like bloom.build_bloom.
-    Insert placement is a per-key loop (the deletability price vs Bloom's
-    vectorized OR); it runs inside executor Arrow groups, never on the
-    driver."""
-    from .bloom import BLOOM_SCHEMA
-
-    def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = CuckooFilter(spec.n_buckets)
-        h = pdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(h):
-            f.insert(h)
-        return _blob_row(int(pdf["p"].iloc[0]), f)
-
-    return frontier.select("p", "url_hash").groupBy("p").applyInPandas(make, BLOOM_SCHEMA)
-
-
-def merge_cuckoo(existing: DataFrame, new_rows: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """Insert new url_hashes into per-partition blobs (distributed fallback
-    when the blob set exceeds the driver cap — bloom.merge_bloom analog)."""
-    from .bloom import BLOOM_SCHEMA
-
-    def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left):
-            f = CuckooFilter.from_bytes(left["filter"].iloc[0], int(left["m_bits"].iloc[0]))
-        else:
-            f = CuckooFilter(spec.n_buckets)
-        if len(right):
-            f.insert(right["url_hash"].to_numpy(dtype=np.int64))
-        return _blob_row(int(key[0]), f)
-
-    return (
-        existing.groupBy("p")
-        .cogroup(new_rows.select("p", "url_hash").groupBy("p"))
-        .applyInPandas(merge, BLOOM_SCHEMA)
-    )
-
-
-def filters_from_blobs(
-    blobs: dict[int, tuple[np.ndarray, int, int]]
-) -> dict[int, CuckooFilter]:
-    """Rehydrate driver-held CuckooFilter objects from bloom.collect_blobs
-    output ((bits, m_bits, k_hashes) with k_hashes == 0)."""
-    return {p: CuckooFilter.from_bytes(bits.tobytes(), m) for p, (bits, m, _k) in blobs.items()}
-
-
-def cuckoo_prefilter_filters(
-    candidates: DataFrame, filters: dict[int, CuckooFilter]
-) -> DataFrame:
-    """Shuffle-free probe against driver-held filters (broadcast + scalar
-    pandas UDF — bloom.bloom_prefilter_blobs analog). Tags ``maybe_seen``:
-    False ⇒ definitely new (cuckoo has no false negatives for present
-    keys); True ⇒ checked exactly by the anti-join."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {p: (f.table.copy(), f.n_buckets) for p, f in filters.items()}
-    )
-
-    def probe(p: pd.Series, h: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(p), dtype=bool)
-        pv = p.to_numpy(dtype=np.int64)
-        hv = h.to_numpy(dtype=np.int64)
-        for part in np.unique(pv):
-            entry = table.get(int(part))
-            if entry is None:
-                continue
-            bits, n_buckets = entry
-            f = CuckooFilter.__new__(CuckooFilter)
-            f.n_buckets = n_buckets
-            f.table = bits
-            mask = pv == part
-            out[mask] = f.contains(hv[mask])
-        return pd.Series(out)
-
-    probe_udf = pandas_udf(probe, BooleanType())
-    return candidates.withColumn("maybe_seen", probe_udf(F.col("p"), F.col("url_hash")))
-
-
-def cuckoo_prefilter(candidates: DataFrame, blobs: DataFrame) -> DataFrame:
-    """Cogroup probe for blob sets beyond the driver broadcast cap
-    (bloom.bloom_prefilter analog): each Arrow group pairs the partition's
-    candidate batch with its one blob."""
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
-    )
-    cand_cols = [f.name for f in candidates.schema.fields]
-
-    def test(key, cand: pd.DataFrame, blob: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if not len(blob) or blob["filter"].iloc[0] is None:
-            cand = cand.copy()
-            cand["maybe_seen"] = False
-            return cand
-        f = CuckooFilter.from_bytes(blob["filter"].iloc[0], int(blob["m_bits"].iloc[0]))
-        cand = cand.copy()
-        cand["maybe_seen"] = f.contains(cand["url_hash"].to_numpy(dtype=np.int64))
-        return cand
-
-    return candidates.groupBy("p").cogroup(blobs.groupBy("p")).applyInPandas(test, out_schema)
-
-
-def insert_filters_inplace(
-    filters: dict[int, CuckooFilter],
-    parts: np.ndarray,
-    hashes: np.ndarray,
-    spec: CuckooSpec,
-    counts: dict[int, int],
-) -> None:
-    """Driver-side steady-state maintenance: insert the wave's new
-    (budget-bounded) keys into the held filters — bloom.merge_blobs_inplace
-    analog; mutates ``filters`` and ``counts``."""
-    for part in np.unique(parts):
-        f = filters.get(int(part))
-        if f is None:
-            f = CuckooFilter(spec.n_buckets)
-            filters[int(part)] = f
-        mask = parts == part
-        f.insert(hashes[mask])
-        counts[int(part)] = f.n_items
-
-
-def delete_filters_inplace(
-    filters: dict[int, CuckooFilter],
-    parts: np.ndarray,
-    hashes: np.ndarray,
-    counts: dict[int, int],
-) -> None:
-    """THE operation Bloom cannot do: remove evicted URLs' fingerprints in
-    place — O(evicted), no rebuild. Callers only delete keys previously
-    inserted (standard cuckoo deletion contract)."""
-    for part in np.unique(parts):
-        f = filters.get(int(part))
-        if f is None:
-            continue
-        mask = parts == part
-        f.delete(hashes[mask])
-        counts[int(part)] = f.n_items
+    def new(self) -> CuckooFilter:
+        return CuckooFilter(self.n_buckets)

@@ -23,7 +23,7 @@ Scale design (SURVEY §4):
   * ordering is the deterministic contract of SURVEY §2.8:
     (priority DESC, depth ASC, wave ASC, url_hash ASC) — strictly stronger
     than the reference's timing-dependent interleaving, same BFS semantics;
-  * dedup = Bloom prefilter (bloom.py) + exact anti-join on
+  * dedup = URL-seen prefilter (seen.py; Bloom by default) + exact anti-join on
     (p, url_hash, url) — url in the key so a 64-bit hash collision can never
     merge two distinct URLs. Below BLOOM_MIN_FRONTIER rows the plain
     anti-join alone is cheaper and the blobs pause (epoch-tracked rebuild on
@@ -42,39 +42,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .bloom import (
-    BLOOM_SCHEMA,
-    BloomSpec,
-    blob_fill_stats,
-    bloom_fill_stats,
-    bloom_prefilter,
-    bloom_prefilter_blobs,
-    build_bloom,
-    collect_blobs,
-    merge_bloom,
-    merge_blobs_inplace,
-)
 from .catalog import SnapshotCatalog
-from .cuckoo import (
-    CuckooSpec,
-    cuckoo_prefilter,
-    cuckoo_prefilter_filters,
-    build_cuckoo,
-    delete_filters_inplace,
-    filters_from_blobs,
-    insert_filters_inplace,
-    merge_cuckoo,
-)
+from .seen import FRONTIER_TABLE, URL_SEEN_TABLE, SeenSet, SeenSpec  # noqa: F401 (re-export)
 from .functions.urls import host_of
-
-FRONTIER_TABLE = "frontier"
-URL_SEEN_TABLE = "url_seen"
 
 # Below this many frontier rows the Bloom machinery (blob read + broadcast
 # probe + reverse prefilter: ~4 extra jobs per wave) costs more than the
 # plain exact anti-join it accelerates. The frontier row count is tracked in
 # snapshot properties, so the switch is free; crossing the threshold
-# triggers a one-time blob rebuild (epoch-tracked, see _ensure_bloom_synced).
+# triggers a one-time blob rebuild (epoch-tracked, see SeenSet.ensure_current).
 BLOOM_MIN_FRONTIER = 1_000_000
 
 # status lifecycle (UrlStore phases, QueueSystem.coffee:194-199 — plus 'error'
@@ -343,57 +319,31 @@ class Frontier:
         self,
         catalog: SnapshotCatalog,
         num_partitions: int = 32,
-        bloom_spec: BloomSpec | None = None,
+        seen_spec: SeenSpec | None = None,
         bloom_min_frontier: int = BLOOM_MIN_FRONTIER,
         bloom_commit_every: int = 8,
-        bloom_max_fpp: float | None = 0.02,
-        bloom_growth: float = 4.0,
-        seen_filter: str = "bloom",
-        cuckoo_spec: CuckooSpec | None = None,
         driver_blob_max_bytes: int = 512 << 20,
         exact_dedup: bool = True,
     ):
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
         self.catalog = catalog
         self.num_partitions = num_partitions
-        self.bloom_spec = bloom_spec or BloomSpec()
         self.bloom_min_frontier = bloom_min_frontier
-        # probe-structure choice (north rule: "bloom/cuckoo URL-seen, cuckoo
-        # fallback for deletions"). Bloom = default: smaller blobs, vectorized
-        # OR-merge; matches reference semantics where nothing is ever
-        # un-seen. Cuckoo = deletable fingerprints: evict() removes keys in
-        # place (O(evicted)) where Bloom must mark the blobs stale and pay
-        # one O(frontier) rebuild. Both ride the same url_seen blob table
-        # (k_hashes=0 marks cuckoo rows) and the same exactness contract —
-        # the filter is a shuffle-reduction prefilter, the anti-join is
-        # membership truth.
-        self.seen_filter = seen_filter
-        self.cuckoo_spec = cuckoo_spec or CuckooSpec()
-        # blob maintenance is DEFERRED: the driver already collects the blobs
-        # for the broadcast probe each wave, so new keys are OR-ed into that
-        # in-process copy (zero Spark jobs) and the url_seen table is only
-        # written every ``bloom_commit_every`` epochs / at flush_bloom().
-        # Crash between flushes ⇒ one O(frontier) rebuild at next use — the
-        # blobs are derived state, the frontier table is membership truth.
-        self.bloom_commit_every = bloom_commit_every
-        # saturation guard: a fixed-m Bloom silently degrades as waves OR
-        # more keys in (fpp = fill^k keeps climbing) — at 10^10-frontier
-        # scale that turns the prefilter into a no-op and the exact
-        # anti-join back into a full-frontier shuffle. Every flush epoch the
-        # driver popcounts its held blobs (m/8 bytes each, no Spark job);
-        # when any partition's ACTUAL fpp exceeds ``bloom_max_fpp`` the spec
-        # grows to ``bloom_growth``× the observed peak keys and the blobs
-        # are rebuilt once from the frontier (the documented O(frontier)
-        # rebuild — amortized: capacity quadruples each time). None = off.
-        self.bloom_max_fpp = bloom_max_fpp
-        self.bloom_growth = bloom_growth
-        # driver-held blob budget: above this total the URL-seen set stays
-        # table-resident and every probe/merge runs distributed (cogroup) —
-        # at 10^10 keys × 10 bits the set is ~12.5 GB, far past any driver;
-        # the explicit knob lets deployments size it to their driver heap
-        # (and tests force the cogroup path at toy scale)
-        self.driver_blob_max_bytes = driver_blob_max_bytes
+        # the URL-seen set (seen.py). ``seen_spec``'s type picks the probe
+        # structure (the north rule's Bloom URL-seen set with a deletable
+        # fallback): BloomSpec (default) = smaller blobs, vectorized
+        # OR-merge, matching reference semantics where nothing is ever
+        # un-seen; CuckooSpec = deletable fingerprints, so evict() removes
+        # keys in place (O(evicted)) where Bloom pays one O(frontier)
+        # rebuild. Maintenance is DEFERRED: new keys fold into the
+        # driver-held copy (zero Spark jobs) and url_seen is written every
+        # ``bloom_commit_every`` epochs / at flush_bloom(). Above
+        # ``driver_blob_max_bytes`` the set stays table-resident and every
+        # probe/merge runs distributed (at 10^10 keys × 10 bits the set is
+        # ~12.5 GB, far past any driver; tests force it at toy scale). A
+        # saturated filter grows and rebuilds once, in either residency.
+        self.seen = SeenSet(
+            catalog, num_partitions, seen_spec, bloom_commit_every, driver_blob_max_bytes
+        )
         # batch-size ceiling for the broadcast semi-join reverse prune
         # (~16 B/key → 1.6 GB at the default); a larger injected batch
         # falls back to the unpruned anti-join rather than OOMing the
@@ -407,48 +357,14 @@ class Frontier:
         # frontier-size-dependent term of a wave, measured ~6 s at 5x10^7
         # rows) disappears entirely. The price is bounded URL LOSS at the
         # filter's false-positive rate: with the saturation auto-grow
-        # holding fpp ≤ bloom_max_fpp (post-grow measured 7e-06), a
+        # holding fpp ≤ BLOOM_MAX_FPP (post-grow measured 7e-06), a
         # 10^6-candidate wave wrongly drops ~7 genuinely-new URLs per
         # million — the standard large-crawler trade (Heritrix ships it as
         # the default wide-crawl uniq filter). Default True: exactness is
         # the reference-parity contract (never lose a URL), and every
         # oracle/test runs exact.
         self.exact_dedup = exact_dedup
-        self._blobs: dict | None = None  # p -> (bits ndarray, m, k)
-        self._blob_counts: dict[int, int] = {}
-        self._blobs_epoch = -1
-        self._dirty_parts: set[int] = set()
         self._pending_cache = None  # intra-commit cache (see _dedup_candidates)
-
-    # -- seen-filter strategy (bloom | cuckoo) -----------------------------
-
-    def _build_seen(self, rows: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return build_cuckoo(rows, self.cuckoo_spec)
-        return build_bloom(rows, self.bloom_spec)
-
-    def _probe_seen_driver(self, rows: DataFrame, state) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return cuckoo_prefilter_filters(rows, state)
-        return bloom_prefilter_blobs(rows, state)
-
-    def _probe_seen_cogroup(self, rows: DataFrame, blob_table: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return cuckoo_prefilter(rows, blob_table)
-        return bloom_prefilter(rows, blob_table)
-
-    def _merge_seen_inplace(self, parts, hashes) -> None:
-        if self.seen_filter == "cuckoo":
-            insert_filters_inplace(
-                self._blobs, parts, hashes, self.cuckoo_spec, self._blob_counts
-            )
-        else:
-            merge_blobs_inplace(self._blobs, parts, hashes, self.bloom_spec, self._blob_counts)
-
-    def _merge_seen_distributed(self, existing: DataFrame, new_rows: DataFrame) -> DataFrame:
-        if self.seen_filter == "cuckoo":
-            return merge_cuckoo(existing, new_rows, self.cuckoo_spec)
-        return merge_bloom(existing, new_rows, self.bloom_spec)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -463,20 +379,9 @@ class Frontier:
             FRONTIER_TABLE, rows, self.num_partitions,
             properties={"n_rows": n, "url_epoch": 0},
         )
-        if self._use_bloom(n):
-            bloom = self._build_seen(rows)
-            self.catalog.create(
-                URL_SEEN_TABLE, bloom, self.num_partitions,
-                properties={"synced_epoch": 0},
-            )
-        else:
-            # small frontier: dedup is a plain anti-join; blobs are built on
-            # demand the first time the frontier crosses the threshold
-            empty = self._build_seen(rows.limit(0))
-            self.catalog.create(
-                URL_SEEN_TABLE, empty, self.num_partitions,
-                properties={"synced_epoch": -1},
-            )
+        # small frontier: dedup is a plain anti-join; the seen set is built
+        # on demand the first time the frontier crosses the threshold
+        self.seen.create(rows, active=self._use_bloom(n))
         rows.unpersist()
 
     def _use_bloom(self, n_rows: int | None) -> bool:
@@ -489,165 +394,16 @@ class Frontier:
         n = props.get("n_rows")
         return (int(n) if n is not None else None), int(props.get("url_epoch", 0))
 
-    def _ensure_blobs_current(self) -> dict | None:
-        """Make the driver-held blob set match the frontier's url_epoch and
-        return it; None when the blobs exceed the driver cap (the distributed
-        cogroup path takes over). Stale committed blobs (sub-threshold waves,
-        a crash between deferred flushes, another writer) trigger ONE
-        O(frontier) rebuild, committed immediately and epoch-stamped."""
-        _, epoch = self._frontier_stats()
-        if self._blobs is not None and self._blobs_epoch == epoch:
-            return self._blobs
-        synced = int(self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1))
-        if synced != epoch:
-            bloom = self._build_seen(self.read().select("p", "url_hash"))
-            self.catalog.overwrite_partitions(
-                URL_SEEN_TABLE, bloom, range(self.num_partitions),
-                properties={"synced_epoch": epoch},
-            )
-        state = collect_blobs(
-            self.catalog.read(URL_SEEN_TABLE), self.driver_blob_max_bytes
-        )
-        if state is None:
-            self._blobs = None
-            return None
-        self._blobs, self._blob_counts = state
-        if self.seen_filter == "cuckoo":
-            self._blobs = filters_from_blobs(self._blobs)
-        self._blobs_epoch = epoch
-        self._dirty_parts = set()
-        return self._blobs
-
     def flush_bloom(self) -> None:
-        """Commit deferred driver-side blob maintenance to the url_seen
-        table (partition-pruned: only dirty blobs are written). Runs every
-        ``bloom_commit_every`` epochs and should be called at crawl end; a
-        no-op when nothing is dirty.
-
-        The saturation check runs even with NOTHING dirty: under
-        ``exact_dedup=False`` a fully saturated filter admits nothing, so
-        no blob ever goes dirty — gating the check on dirtiness would
-        leave the filter saturated FOREVER, silently dropping every new
-        URL. The check is a driver-side popcount (no Spark job), so the
-        nothing-dirty path stays cheap."""
-        if self._blobs is None:
-            return
-        if self.seen_filter == "bloom" and self.bloom_max_fpp is not None:
-            stats = blob_fill_stats(self._blobs, self._blob_counts)
-            worst = max((s["est_fpp"] for s in stats.values()), default=0.0)
-            if worst > self.bloom_max_fpp:
-                self._grow_and_rebuild(stats)
-                return
-        if not self._dirty_parts:
-            return
-        dirty = sorted(self._dirty_parts)
-        if self.seen_filter == "cuckoo":
-            rows = [
-                (
-                    p,
-                    self._blobs[p].to_bytes(),
-                    self._blob_counts.get(p, 0),
-                    self._blobs[p].n_buckets,
-                    0,
-                )
-                for p in dirty
-            ]
-        else:
-            rows = [
-                (
-                    p,
-                    self._blobs[p][0].tobytes(),
-                    self._blob_counts.get(p, 0),
-                    self._blobs[p][1],
-                    self._blobs[p][2],
-                )
-                for p in dirty
-            ]
-        df = self.catalog.spark.createDataFrame(rows, BLOOM_SCHEMA)
-        self.catalog.overwrite_partitions(
-            URL_SEEN_TABLE, df, dirty, properties={"synced_epoch": self._blobs_epoch}
-        )
-        self._dirty_parts = set()
-
-    def _grow_and_rebuild(self, stats: dict[int, dict]) -> None:
-        """Saturation response: grow each partition's blob to
-        ``bloom_growth``× ITS OWN observed key count (10 bits/key → fpp
-        back to ≈0.8%) and rebuild the WHOLE blob set from the frontier
-        table — membership truth, so the rebuild can never lose a key.
-        Committed at the current blob epoch; the rebuilt blobs stay
-        driver-resident when they fit the budget (see below), so the next
-        wave probes immediately.
-
-        Sizing is PER PARTITION, not a uniform peak-sized spec: frontier
-        partitions are host-salted, so a hot domain skews key counts
-        10-100x — a uniform spec at growth×peak would cost
-        peak-sized-blob × P driver/broadcast bytes (measured 540 MB at the
-        10^7-row skewed leg vs ~70 MB per-partition). ``self.bloom_spec``
-        keeps the grown PEAK as the fallback for partitions that appear
-        later; every probe/merge path reads per-row (m, k), so the
-        heterogeneous set is native (bloom.build_bloom m_by_partition)."""
-        import math
-
-        def cap_of(s: dict) -> float:
-            return max(
-                s["n_items"],
-                s["est_keys"] if math.isfinite(s["est_keys"]) else 0.0,
-            )
-
-        peak = max(cap_of(s) for s in stats.values())
-        self.bloom_spec = BloomSpec.for_capacity(int(math.ceil(peak * self.bloom_growth)))
-        sizes = {
-            int(p): BloomSpec.for_capacity(
-                int(math.ceil(cap_of(s) * self.bloom_growth))
-            ).m_bits
-            for p, s in stats.items()
-        }
-        bloom = build_bloom(
-            self.read().select("p", "url_hash"), self.bloom_spec,
-            m_by_partition=sizes,
-        )
-        self.catalog.overwrite_partitions(
-            URL_SEEN_TABLE,
-            bloom,
-            range(self.num_partitions),
-            properties={"synced_epoch": self._blobs_epoch},
-        )
-        # keep the freshly rebuilt blobs driver-resident when they fit the
-        # budget — the epoch they were committed under is current, so the
-        # next wave probes immediately instead of paying a reload (the
-        # big-frontier leg measured that reload as most of the first
-        # post-grow wave's overhead); beyond the budget the cogroup path
-        # takes over as usual
-        state = collect_blobs(
-            self.catalog.read(URL_SEEN_TABLE), self.driver_blob_max_bytes
-        )
-        if state is None:
-            self._blobs = None
-            self._blobs_epoch = -1
-        else:
-            self._blobs, self._blob_counts = state
-        self._dirty_parts = set()
+        """Commit deferred URL-seen maintenance and run the saturation
+        check (SeenSet.flush). Runs every ``bloom_commit_every`` epochs and
+        should be called at crawl end."""
+        self.seen.flush()
 
     def seen_fill_stats(self) -> dict[int, dict]:
-        """Per-partition saturation of the URL-seen structure: {p:
-        {n_items, m_bits, k_hashes, fill_ratio, est_keys, est_fpp}}.
-        Driver-held Bloom blobs are popcounted in-process (no Spark job);
-        otherwise (cuckoo mode, or blob sets beyond the driver cap) one
-        distributed pass over the blob table (bloom.bloom_fill_stats)."""
-        if self.seen_filter == "bloom" and self._blobs is not None:
-            return blob_fill_stats(self._blobs, self._blob_counts)
-        rows = bloom_fill_stats(self.catalog.read(URL_SEEN_TABLE)).collect()
-        return {
-            r["p"]: {
-                "n_items": r["n_items"],
-                "m_bits": r["m_bits"],
-                "k_hashes": r["k_hashes"],
-                "fill_ratio": r["fill_ratio"],
-                "est_keys": r["est_keys"],
-                "est_fpp": r["est_fpp"],
-            }
-            for r in rows
-        }
+        """Per-partition saturation of the URL-seen set: {p: {n_items,
+        m_bits, k_hashes, fill_ratio, est_keys, est_fpp}} (SeenSet.fill_stats)."""
+        return self.seen.fill_stats()
 
     def read(self) -> DataFrame:
         return self.catalog.read(FRONTIER_TABLE)
@@ -694,15 +450,7 @@ class Frontier:
             frontier_keys = self.read().select("p", "url_hash", "url")
             return rows.join(frontier_keys, on=["p", "url_hash", "url"], how="left_anti")
 
-        blobs = self._ensure_blobs_current()
-        if blobs is not None:
-            # broadcast probe from the driver-held blobs keeps the candidate
-            # batch un-shuffled (and skips a per-wave blob table read)
-            tagged = self._probe_seen_driver(rows, blobs)
-        else:
-            # blob set beyond the driver cap: cogroup probe, blob shipped
-            # once per partition
-            tagged = self._probe_seen_cogroup(rows, self.catalog.read(URL_SEEN_TABLE))
+        tagged = self.seen.probe(rows)
         # persisted: materialized once by the prune-guard count, reused
         # for the final union (commit_wave unpersists after the commit)
         tagged = tagged.persist()
@@ -896,57 +644,19 @@ class Frontier:
         n_new = n_new_of()
         if new_rows is not None:
             if use_bloom and n_new:
-                if self._blobs is not None and self._blobs_epoch == prev_epoch:
-                    # steady state: fold the wave's new keys into the driver-
-                    # held blobs in-process (no Spark job, no table write —
-                    # the flush below commits every bloom_commit_every
-                    # epochs). new_rows is cached from the frontier write, so
-                    # the key pull is a read of cached blocks.
-                    import numpy as np
-
-                    pdf = new_rows.select("p", "url_hash").toPandas()
-                    self._merge_seen_inplace(
-                        pdf["p"].to_numpy(np.int64),
-                        pdf["url_hash"].to_numpy(np.int64),
-                    )
-                    self._blobs_epoch = prev_epoch + 1
-                    self._dirty_parts.update(int(p) for p in pdf["p"].unique())
-                    synced = int(
-                        self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1)
-                    )
-                    if self._blobs_epoch - synced >= self.bloom_commit_every:
-                        self.flush_bloom()
-                else:
-                    # blob set beyond the driver cap: distributed incremental
-                    # merge + immediate commit (only when the committed blobs
-                    # were in sync; otherwise leave stale — the next
-                    # above-threshold wave rebuilds once)
-                    synced = int(
-                        self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1)
-                    )
-                    if synced == prev_epoch:
-                        tl = sorted(written)
-                        bloom = self.catalog.read(URL_SEEN_TABLE, snapshot=None)
-                        new_bloom = self._merge_seen_distributed(
-                            bloom.filter(F.col("p").isin(tl)),
-                            new_rows.select("p", "url_hash"),
-                        )
-                        self.catalog.overwrite_partitions(
-                            URL_SEEN_TABLE, new_bloom, tl,
-                            properties={"synced_epoch": prev_epoch + 1},
-                        )
+                # new_rows is cached from the frontier write, so the key
+                # pull / merge reads cached blocks
+                self.seen.add(new_rows.select("p", "url_hash"), written, prev_epoch + 1)
             new_rows.unpersist()
-        if use_bloom and not self.exact_dedup and not n_new and self._blobs is not None:
+        if use_bloom and not self.exact_dedup and not n_new:
             # trust-mode liveness: a SATURATED filter makes every candidate
-            # probe-positive, so n_new stays 0 and the epoch-gated flush
-            # above never runs — without this, the saturation check could
-            # only fire at crawl end while every discovered URL was being
-            # dropped in between. A zero-new wave IS the saturation
-            # symptom, so run the check right here: flush_bloom popcounts
-            # the driver-held blobs in-process (no Spark job) and returns
-            # immediately when the filter is healthy and nothing is dirty
-            # — the steady-state cost of this call is microseconds.
-            self.flush_bloom()
+            # probe-positive, so n_new stays 0 and no epoch-gated flush ever
+            # runs — without this, the saturation check could only fire at
+            # crawl end while every discovered URL was being dropped in
+            # between. A zero-new wave IS the saturation symptom, so check
+            # right here (driver-held: an in-process popcount, microseconds
+            # when healthy; table-resident: one distributed stats pass).
+            self.seen.flush()
         if updates is not None:
             updates.unpersist()
         self._drop_pending_cache()
@@ -1096,28 +806,21 @@ class Frontier:
     def evict(self, match: Column) -> int:
         """Re-crawl policy: REMOVE matching rows from the frontier so those
         URLs become *unseen* — re-discoverable and re-fetchable as if never
-        crawled. This is the operation the north rule's "cuckoo fallback for
-        deletions" exists for (the reference never un-sees a URL:
+        crawled. This is the operation the north rule's deletable URL-seen
+        fallback exists for (the reference never un-sees a URL:
         UrlStore.reschedule only flips status, QueueSystem.coffee:189-191 —
         evict is the beyond-reference aging/re-crawl primitive).
 
         Copy-on-write and partition-pruned: only partitions containing
         matches are rewritten; ``url_epoch`` bumps so every derived
-        structure notices. Probe-filter maintenance follows the filter's
-        capability:
-
-          * ``seen_filter='cuckoo'``: evicted url_hash fingerprints are
-            deleted from the driver-held filters IN PLACE — O(evicted),
-            no rebuild; blobs flush on the normal deferred schedule.
-          * ``seen_filter='bloom'``: bitsets cannot delete, so the blobs go
-            stale and the next above-threshold use pays the one
-            O(frontier) rebuild (_ensure_blobs_current) — correct either
-            way, since the filter is only ever a prefilter and the
-            anti-join is membership truth.
+        structure notices. The seen set follows its structure's capability
+        (SeenSet.remove): a CuckooSpec set deletes the evicted fingerprints
+        from its driver-held filters IN PLACE — O(evicted), no rebuild —
+        while a Bloom set goes stale and the next above-threshold use pays
+        one O(frontier) rebuild. Correct either way: the filter is only
+        ever a prefilter and the anti-join is membership truth.
 
         Returns the number of rows evicted."""
-        import numpy as np
-
         prev_n, epoch = self._frontier_stats()
         hits = self.read().filter(match).select("p", "url_hash").persist()
         per_part = hits.groupBy("p").count().collect()
@@ -1133,33 +836,11 @@ class Frontier:
         props["url_epoch"] = epoch + 1
         if prev_n is not None:
             props["n_rows"] = prev_n - n_evicted
-        cuckoo_current = (
-            self.seen_filter == "cuckoo"
-            and self._blobs is not None
-            and self._blobs_epoch == epoch
-        )
-        if cuckoo_current:
-            pdf = hits.toPandas()
         self.catalog.overwrite_partitions(
             FRONTIER_TABLE, remaining.select(*FRONTIER_COLS), parts, properties=props
         )
-        if cuckoo_current:
-            delete_filters_inplace(
-                self._blobs,
-                pdf["p"].to_numpy(np.int64),
-                pdf["url_hash"].to_numpy(np.int64),
-                self._blob_counts,
-            )
-            self._blobs_epoch = epoch + 1
-            self._dirty_parts.update(parts)
-            synced = int(self.catalog.snapshot_property(URL_SEEN_TABLE).get("synced_epoch", -1))
-            if self._blobs_epoch - synced >= self.bloom_commit_every:
-                self.flush_bloom()
-        else:
-            # bloom (or stale driver state): drop the held copy; the epoch
-            # mismatch forces the documented one-time rebuild on next use
-            self._blobs = None
-            self._blobs_epoch = -1
+        # hits is cached and bound to the pre-eviction snapshot's files
+        self.seen.remove(hits, epoch + 1)
         hits.unpersist()
         return n_evicted
 

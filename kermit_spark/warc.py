@@ -775,6 +775,16 @@ def _iter_records_bytes(data: bytes):
     yield from _iter_plain_records_bytes(data)
 
 
+def _responses(records):
+    """Only ``response`` records carry a fetched page. Foreign archives
+    (Common Crawl) open with a warcinfo record — no target URI — and
+    interleave request/metadata records whose payload is no HTTP response;
+    the binary readers skip them rather than crash the task."""
+    for rec in records:
+        if rec[0].get("warc-type", "").lower() == "response":
+            yield rec
+
+
 def _parse_http_payload_bytes(raw: bytes) -> tuple[int, str | None, bytes]:
     """One response record's raw payload → (status, content_type,
     body_bytes). The HTTP head is ASCII-framed by spec; latin-1 decode
@@ -870,7 +880,7 @@ def read_warc_binary(spark: SparkSession, path: str) -> DataFrame:
         for pdf in batches:
             rows: list[tuple] = []
             for data in pdf["content"]:
-                for headers, raw, _, _ in _iter_records_bytes(bytes(data)):
+                for headers, raw, _, _ in _responses(_iter_records_bytes(bytes(data))):
                     status, ctype, body = _parse_http_payload_bytes(raw)
                     rows.append(
                         (
@@ -907,7 +917,7 @@ def build_cdx_binary(spark: SparkSession, path: str) -> DataFrame:
         for pdf in batches:
             rows: list[tuple] = []
             for fname, data in zip(pdf["filename"], pdf["content"]):
-                for headers, raw, off, ln in _iter_records_bytes(bytes(data)):
+                for headers, raw, off, ln in _responses(_iter_records_bytes(bytes(data))):
                     status, ctype, body = _parse_http_payload_bytes(raw)
                     rows.append(
                         (
@@ -971,7 +981,7 @@ def read_warc_at_binary(spark: SparkSession, cdx: DataFrame) -> DataFrame:
                         blob = f.read(int(ln))
                         if blob[:2] == _GZIP_MAGIC:
                             blob = zlib.decompress(blob, wbits=31)
-                        for headers, raw, _, _ in _iter_plain_records_bytes(blob):
+                        for headers, raw, _, _ in _responses(_iter_plain_records_bytes(blob)):
                             url = headers["warc-target-uri"]
                             if url not in wanted:
                                 continue
@@ -1046,7 +1056,7 @@ def documents_from_warc_binary(
         for pdf in batches:
             rows: list[tuple] = []
             for data in pdf["content"]:
-                for headers, raw, _, _ in _iter_records_bytes(bytes(data)):
+                for headers, raw, _, _ in _responses(_iter_records_bytes(bytes(data))):
                     status, ctype, body = _parse_http_payload_bytes(raw)
                     rows.append(
                         (

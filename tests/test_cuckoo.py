@@ -26,7 +26,7 @@ def test_serialization_roundtrip():
     f = CuckooFilter(256)
     keys = np.arange(50, dtype=np.int64) * 31
     f.insert(keys)
-    g = CuckooFilter.from_bytes(f.to_bytes(), 256)
+    g = CuckooFilter.decode(*f.encode())
     assert g.contains(keys).all()
     assert g.n_items == f.n_items
 
@@ -58,37 +58,32 @@ def test_delete_keeps_remaining_property(keys):
 
 
 def test_build_cuckoo_blobs_match_driver_filters(spark):
-    from kermit_spark.cuckoo import CuckooSpec, build_cuckoo, filters_from_blobs
-    from kermit_spark.bloom import collect_blobs
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build, collect
 
     rows = [(i % 4, i * 7919 + 13) for i in range(400)]
     df = spark.createDataFrame(rows, "p int, url_hash long")
-    blobs = collect_blobs(build_cuckoo(df, CuckooSpec(n_buckets=1 << 10)))
-    assert blobs is not None
-    filters = filters_from_blobs(blobs[0])
+    filters = collect(build(df, CuckooSpec(n_buckets=1 << 10)))
+    assert filters is not None
     assert set(filters) == {0, 1, 2, 3}
     for p, f in filters.items():
         keys = np.array([h for pp, h in rows if pp == p], dtype=np.int64)
         assert f.contains(keys).all()  # no false negatives
-        assert blobs[1][p] == f.n_items
+        assert f.n_items == len(keys) == int((f.table != 0).sum())
 
 
 def test_merge_cuckoo_and_cogroup_probe(spark):
-    from kermit_spark.cuckoo import (
-        CuckooSpec,
-        build_cuckoo,
-        cuckoo_prefilter,
-        merge_cuckoo,
-    )
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build, merge, probe_table
 
     spec = CuckooSpec(n_buckets=1 << 10)
     first = spark.createDataFrame([(i % 2, i) for i in range(100)], "p int, url_hash long")
     more = spark.createDataFrame([(i % 2, i) for i in range(100, 150)], "p int, url_hash long")
-    blobs = merge_cuckoo(build_cuckoo(first, spec), more, spec)
+    blobs = merge(build(first, spec), more, spec)
     cands = spark.createDataFrame(
         [(i % 2, i) for i in range(0, 200, 10)], "p int, url_hash long"
     )
-    tagged = {r["url_hash"]: r["maybe_seen"] for r in cuckoo_prefilter(cands, blobs).collect()}
+    tagged = {r["url_hash"]: r["maybe_seen"] for r in probe_table(cands, blobs).collect()}
     for h, seen in tagged.items():
         if h < 150:
             assert seen  # inserted keys: never a false negative
@@ -96,29 +91,22 @@ def test_merge_cuckoo_and_cogroup_probe(spark):
 
 
 def test_driver_probe_matches_cogroup_probe(spark):
-    from kermit_spark.bloom import collect_blobs
-    from kermit_spark.cuckoo import (
-        CuckooSpec,
-        build_cuckoo,
-        cuckoo_prefilter,
-        cuckoo_prefilter_filters,
-        filters_from_blobs,
-    )
+    from kermit_spark.cuckoo import CuckooSpec
+    from kermit_spark.seen import build, collect, probe_held, probe_table
 
     spec = CuckooSpec(n_buckets=1 << 10)
     base = spark.createDataFrame([(i % 4, i * 31) for i in range(300)], "p int, url_hash long")
-    blob_df = build_cuckoo(base, spec).persist()
+    blob_df = build(base, spec).persist()
     cands = spark.createDataFrame(
         [(i % 4, i * 31) for i in range(250, 400)], "p int, url_hash long"
     )
     via_cogroup = {
         (r["p"], r["url_hash"]): r["maybe_seen"]
-        for r in cuckoo_prefilter(cands, blob_df).collect()
+        for r in probe_table(cands, blob_df).collect()
     }
-    filters = filters_from_blobs(collect_blobs(blob_df)[0])
     via_driver = {
         (r["p"], r["url_hash"]): r["maybe_seen"]
-        for r in cuckoo_prefilter_filters(cands, filters).collect()
+        for r in probe_held(cands, collect(blob_df)).collect()
     }
     blob_df.unpersist()
     assert via_cogroup == via_driver

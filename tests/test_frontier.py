@@ -9,7 +9,9 @@ politeness/dequeue invariants (SURVEY §2.3 Q1-Q9, §5 port plan):
 import pytest
 from pyspark.sql import functions as F
 
+from kermit_spark.bloom import BloomSpec
 from kermit_spark.catalog import SnapshotCatalog
+from kermit_spark.cuckoo import CuckooSpec
 from kermit_spark.frontier import (
     ERROR,
     SCHEDULED,
@@ -205,7 +207,7 @@ def test_blob_crash_resume_rebuilds_and_stays_exact(spark, tmp_path):
 def test_bloom_autogrows_on_saturation(spark, tmp_path):
     """A fixed-m Bloom saturates as waves OR keys in (fpp = fill^k climbs
     toward 1, turning the prefilter into a no-op at 10^10 scale). The flush
-    hook must detect actual fpp > bloom_max_fpp from the driver-held blobs,
+    hook must detect actual fpp > BLOOM_MAX_FPP from the driver-held blobs,
     grow the spec, and rebuild from the frontier — with dedup exactness
     untouched on both sides of the rebuild."""
     from kermit_spark.bloom import BloomSpec
@@ -214,12 +216,12 @@ def test_bloom_autogrows_on_saturation(spark, tmp_path):
     tiny = BloomSpec(m_bits=1 << 10, k_hashes=7)
     fr = Frontier(
         cat, num_partitions=2, bloom_min_frontier=0, bloom_commit_every=1,
-        bloom_spec=tiny, bloom_max_fpp=0.02,
+        seen_spec=tiny,
     )
     fr.init(_urls(spark, _range_urls(0, 50)))
     # ~375 keys/partition into 1024 bits -> fill ≈ 0.92, fpp ≈ 0.57 >> 0.02
     fr.schedule(_urls(spark, _range_urls(50, 800)), wave=1)
-    assert fr.bloom_spec.m_bits > tiny.m_bits
+    assert fr.seen.spec.m_bits > tiny.m_bits
     # post-rebuild blobs are back at healthy fpp (read from the table: the
     # driver copy reloads lazily)
     stats = fr.seen_fill_stats()
@@ -423,67 +425,79 @@ def test_reprioritize_wires_pagerank_into_priorities(spark, frontier):
 # -- eviction / re-crawl (bloom vs cuckoo seen-filter) ----------------------
 
 
-@pytest.mark.parametrize("mode", ["bloom", "cuckoo"])
-def test_evict_unseens_urls(spark, tmp_path, mode):
+SPECS = pytest.mark.parametrize("spec", [BloomSpec(), CuckooSpec()], ids=["bloom", "cuckoo"])
+# driver-held vs table-resident: a 1-byte driver budget keeps the seen set
+# in the url_seen table (cogroup probe, distributed merge)
+RESIDENCIES = (("driver", 512 << 20), ("table", 1))
+
+
+@SPECS
+def test_evict_unseens_urls(spark, tmp_path, spec):
     """Frontier.evict removes matching rows AND un-sees them: the same URLs
     re-schedule as brand new, while everything else stays deduped. Same
-    semantics under both probe filters (the filter is never membership
-    truth)."""
-    cat = SnapshotCatalog(spark, str(tmp_path / mode))
-    fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_commit_every=100, seen_filter=mode)
-    fr.init(_urls(spark, _range_urls(0, 30)))
-    fr.schedule(_urls(spark, _range_urls(30, 60)), wave=1)
-    h0 = [u for u in _range_urls(0, 60) if u.startswith("http://h0.test/")]
+    semantics under both probe filters and both residencies (the filter is
+    never membership truth)."""
+    for residency, cap in RESIDENCIES:
+        cat = SnapshotCatalog(spark, str(tmp_path / residency))
+        fr = Frontier(cat, num_partitions=4, seen_spec=spec, bloom_min_frontier=0,
+                      bloom_commit_every=100, driver_blob_max_bytes=cap)
+        fr.init(_urls(spark, _range_urls(0, 30)))
+        fr.schedule(_urls(spark, _range_urls(30, 60)), wave=1)
+        assert (fr.seen.held is None) == (residency == "table")
+        h0 = [u for u in _range_urls(0, 60) if u.startswith("http://h0.test/")]
 
-    n = fr.evict(F.col("host") == "h0.test")
-    assert n == len(h0) == 20
-    left = {r["url"] for r in fr.read().collect()}
-    assert left == set(_range_urls(0, 60)) - set(h0)
-    # evicted URLs are unseen again: full re-accept; the rest still dedup
-    assert fr.schedule(_urls(spark, h0), wave=2) == len(h0)
-    assert fr.schedule(_urls(spark, _range_urls(0, 60)), wave=3) == 0
-    # row-count bookkeeping survived the round trip
-    assert fr.read().count() == 60
-    # no-op evict
-    assert fr.evict(F.col("host") == "nosuch.test") == 0
+        n = fr.evict(F.col("host") == "h0.test")
+        assert n == len(h0) == 20
+        left = {r["url"] for r in fr.read().collect()}
+        assert left == set(_range_urls(0, 60)) - set(h0)
+        # evicted URLs are unseen again: full re-accept; the rest still dedup
+        assert fr.schedule(_urls(spark, h0), wave=2) == len(h0)
+        assert fr.schedule(_urls(spark, _range_urls(0, 60)), wave=3) == 0
+        # row-count bookkeeping survived the round trip
+        assert fr.read().count() == 60
+        # no-op evict
+        assert fr.evict(F.col("host") == "nosuch.test") == 0
 
 
-def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path):
+def _count_builds(monkeypatch) -> list:
+    """Count seen-set (re)builds from the frontier table."""
+    from kermit_spark import seen
+
+    calls = []
+    orig = seen.build
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(seen, "build", counting)
+    return calls
+
+
+def test_evict_cuckoo_deletes_in_place_without_rebuild(spark, tmp_path, monkeypatch):
     """The cuckoo payoff: evict maintains the driver-held filters by
     deleting fingerprints — no url_seen table write, no O(frontier)
     rebuild — and dedup stays exact across the eviction."""
+    from kermit_spark.frontier import URL_SEEN_TABLE
+
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_commit_every=100, seen_filter="cuckoo")
+    fr = Frontier(cat, num_partitions=4, seen_spec=CuckooSpec(), bloom_min_frontier=0,
+                  bloom_commit_every=100)
     fr.init(_urls(spark, _range_urls(0, 40)))
     fr.schedule(_urls(spark, _range_urls(40, 50)), wave=1)  # warm driver blobs
 
-    builds = 0
-    orig = Frontier._build_seen
-
-    def counting(self, rows):
-        nonlocal builds
-        builds += 1
-        return orig(self, rows)
-
-    Frontier._build_seen = counting
-    try:
-        from kermit_spark.frontier import URL_SEEN_TABLE
-
-        seen_snap = cat.current_snapshot(URL_SEEN_TABLE)
-        assert fr.evict(F.col("host") == "h1.test") == 17
-        # deferred flush: table untouched, no rebuild triggered
-        assert cat.current_snapshot(URL_SEEN_TABLE) == seen_snap
-        assert builds == 0
-        # dedup exact THROUGH the held filters (no rebuild on schedule)
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
-        assert builds == 0
-    finally:
-        Frontier._build_seen = orig
+    builds = _count_builds(monkeypatch)
+    seen_snap = cat.current_snapshot(URL_SEEN_TABLE)
+    assert fr.evict(F.col("host") == "h1.test") == 17
+    # deferred flush: table untouched, no rebuild triggered
+    assert cat.current_snapshot(URL_SEEN_TABLE) == seen_snap
+    assert len(builds) == 0
+    # dedup exact THROUGH the held filters (no rebuild on schedule)
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
+    assert len(builds) == 0
 
 
-def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path):
+def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path, monkeypatch):
     """Bloom cannot delete: evict drops the held blobs and the next use
     pays exactly one rebuild — correctness unchanged."""
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
@@ -491,23 +505,12 @@ def test_evict_bloom_marks_stale_then_rebuilds_once(spark, tmp_path):
     fr.init(_urls(spark, _range_urls(0, 40)))
     fr.schedule(_urls(spark, _range_urls(40, 50)), wave=1)
 
-    builds = 0
-    orig = Frontier._build_seen
-
-    def counting(self, rows):
-        nonlocal builds
-        builds += 1
-        return orig(self, rows)
-
-    Frontier._build_seen = counting
-    try:
-        assert fr.evict(F.col("host") == "h1.test") == 17
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
-        assert builds == 1  # the one documented rebuild
-        assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=3) == 0
-        assert builds == 1  # and only one
-    finally:
-        Frontier._build_seen = orig
+    builds = _count_builds(monkeypatch)
+    assert fr.evict(F.col("host") == "h1.test") == 17
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=2) == 17
+    assert len(builds) == 1  # the one documented rebuild
+    assert fr.schedule(_urls(spark, _range_urls(0, 50)), wave=3) == 0
+    assert len(builds) == 1  # and only one
 
 
 def test_recrawl_flips_visited_and_resets_age_clock(spark, tmp_path):
@@ -1116,12 +1119,13 @@ def test_priority_aging_prevents_starvation(spark):
     )
 
 
-def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path):
+@SPECS
+def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path, spec):
     """The 10^10-scale regime: a URL-seen blob set past the driver budget
     (driver_blob_max_bytes) must stay table-resident — schedule probes via
     the distributed cogroup path, commit merges via the distributed
     incremental merge — and produce EXACTLY the dedup result the
-    driver-held path produces."""
+    driver-held path produces, for either probe structure."""
     from pyspark.sql import functions as F
 
     from kermit_spark.catalog import SnapshotCatalog
@@ -1139,6 +1143,7 @@ def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path):
     for mode, cap in (("driver", 512 << 20), ("cogroup", 1)):
         fr = Frontier(
             SnapshotCatalog(spark, str(tmp_path / mode)), num_partitions=4,
+            seen_spec=spec,
             bloom_min_frontier=0,          # bloom active at toy scale
             driver_blob_max_bytes=cap,
         )
@@ -1146,7 +1151,7 @@ def test_bloom_cogroup_fallback_beyond_driver_cap(spark, tmp_path):
         n1 = fr.schedule(urls(1000, 3000), wave=1)   # 50% overlap
         n2 = fr.schedule(urls(2500, 3500), wave=2)   # overlaps wave 1's new rows
         if mode == "cogroup":
-            assert fr._blobs is None                  # never driver-held
+            assert fr.seen.held is None               # never driver-held
         results[mode] = (
             n1, n2,
             sorted(r["url"] for r in fr.read().filter(F.col("wave") > 0).collect()),
@@ -1186,7 +1191,7 @@ def test_trust_filter_mode_documents_bounded_loss_on_saturated_filter(spark, tmp
     for exact in (True, False):
         cat = SnapshotCatalog(spark, str(tmp_path / f"s{exact}"))
         fr = Frontier(cat, num_partitions=2, bloom_min_frontier=0,
-                      bloom_spec=tiny, bloom_max_fpp=None, exact_dedup=exact)
+                      seen_spec=tiny, exact_dedup=exact)
         fr.init(_urls(spark, _range_urls(0, 2000)))
         n_new = fr.schedule(_urls(spark, _range_urls(2000, 2400)), wave=1)
         lost[exact] = 400 - n_new
@@ -1206,13 +1211,12 @@ def test_trust_filter_mode_never_duplicates_frontier_rows(spark, tmp_path):
 
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_spec=BloomSpec(m_bits=1 << 10, k_hashes=7),
-                  bloom_max_fpp=0.02, exact_dedup=False)
+                  seen_spec=BloomSpec(m_bits=1 << 10, k_hashes=7), exact_dedup=False)
     fr.init(_urls(spark, _range_urls(0, 3000)))
-    fr._ensure_blobs_current()
+    fr.seen.ensure_current()
     fr.schedule(_urls(spark, _range_urls(2990, 3010)), wave=0)  # mostly dropped
     fr.flush_bloom()                                            # auto-grow fires
-    assert fr.bloom_spec.m_bits > 1 << 10
+    assert fr.seen.spec.m_bits > 1 << 10
     fr.schedule(_urls(spark, _range_urls(2500, 3110)), wave=1)  # re-offer + new
     total = fr.read().count()
     distinct = fr.read().select("url").distinct().count()
@@ -1223,28 +1227,66 @@ def test_trust_filter_mode_never_duplicates_frontier_rows(spark, tmp_path):
     assert n_target == 10
 
 
-def test_trust_filter_saturation_recovers_mid_crawl(spark, tmp_path):
+@pytest.mark.parametrize("residency,cap", RESIDENCIES, ids=[r for r, _ in RESIDENCIES])
+def test_trust_filter_saturation_recovers_mid_crawl(spark, tmp_path, residency, cap):
     """Trust-mode liveness (review finding): a saturated filter makes every
     candidate probe-positive, so n_new==0 and the epoch-gated flush never
     runs — the auto-grow must fire from the zero-new wave itself, not
     only at crawl end, or every URL discovered for the rest of the crawl
     is silently dropped. After one all-dropped wave the NEXT offer of the
-    same URLs must be admitted through the grown filter."""
-    from kermit_spark.bloom import BloomSpec
-
+    same URLs must be admitted through the grown filter — in BOTH
+    residencies (table-resident reads its stats through the distributed
+    pass)."""
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     fr = Frontier(cat, num_partitions=4, bloom_min_frontier=0,
-                  bloom_spec=BloomSpec(m_bits=1 << 10, k_hashes=7),
-                  bloom_max_fpp=0.02, exact_dedup=False)
+                  seen_spec=BloomSpec(m_bits=1 << 10, k_hashes=7), exact_dedup=False,
+                  driver_blob_max_bytes=cap)
     fr.init(_urls(spark, _range_urls(0, 12000)))  # fill 1.0: every bit set
-    fr._ensure_blobs_current()
-    m0 = fr.bloom_spec.m_bits
+    fr.seen.ensure_current()
+    assert (fr.seen.held is None) == (residency == "table")
+    m0 = fr.seen.spec.m_bits
     # saturated: every genuinely-new candidate probes positive -> 0 new
     n1 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=1)
     assert n1 == 0
     # the zero-new wave itself must have triggered the saturation check
-    assert fr.bloom_spec.m_bits > m0
+    assert fr.seen.spec.m_bits > m0
     # next offer of the SAME URLs goes through the grown filter
     n2 = fr.schedule(_urls(spark, _range_urls(12000, 12200)), wave=2)
     assert n2 == 200
     assert fr.read().count() == 12200
+
+
+def test_cuckoo_grows_instead_of_overflowing(spark, tmp_path):
+    """A cuckoo table refuses inserts once full, so the seen set must grow
+    it BEFORE a wave's keys overfill it — a fold or merge never hits
+    "cuckoo filter full", and every URL is admitted exactly once, in both
+    residencies."""
+    for residency, cap in RESIDENCIES:
+        cat = SnapshotCatalog(spark, str(tmp_path / residency))
+        fr = Frontier(cat, num_partitions=2, seen_spec=CuckooSpec(n_buckets=16),
+                      bloom_min_frontier=0, driver_blob_max_bytes=cap)
+        fr.init(_urls(spark, _range_urls(0, 20)))
+        assert fr.schedule(_urls(spark, _range_urls(0, 400)), wave=1) == 380
+        assert fr.schedule(_urls(spark, _range_urls(0, 700)), wave=2) == 300
+        assert fr.seen.spec.n_buckets > 16
+        assert fr.read().count() == fr.read().select("url").distinct().count() == 700
+        assert all(s["fill_ratio"] <= 0.85 for s in fr.seen_fill_stats().values())
+
+
+def test_warm_driver_held_schedule_job_count(spark, tmp_path):
+    """Pins the Spark jobs of one warm schedule on the steady driver-held
+    Bloom path (broadcast probe, in-process fold, deferred flush): a change
+    that adds a per-wave job fails here. Half the batch is already seen."""
+    sc = spark.sparkContext
+    fr = Frontier(SnapshotCatalog(spark, str(tmp_path / "cat")), num_partitions=4,
+                  bloom_min_frontier=0)
+    fr.init(_urls(spark, _range_urls(0, 60)))
+    fr.schedule(_urls(spark, _range_urls(40, 80)), wave=1)  # loads the blobs
+    group = "warm-driver-held-schedule"
+    sc.setJobGroup(group, "one warm driver-held Bloom schedule")
+    try:
+        n = fr.schedule(_urls(spark, _range_urls(60, 100)), wave=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 20
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11

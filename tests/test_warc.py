@@ -824,3 +824,54 @@ def test_binary_walker_tolerates_truncation(spark, tmp_path):
         back = read_warc_binary(spark, d).collect()
         assert len(back) == 1, name                      # the valid prefix
         assert back[0]["url"] == _BIN_ROWS[0][0], name
+
+
+def test_binary_readers_skip_non_response_records(spark, tmp_path):
+    """A real Common Crawl .warc.gz opens with a warcinfo record (no target
+    URI) and interleaves request/metadata records (payload is no HTTP
+    response). Every binary reader must skip them and return exactly the
+    response records, instead of crashing the task on the first one."""
+    import zlib
+
+    from kermit_spark.warc import (
+        _WARC_VERSION,
+        _render_record_bytes,
+        build_cdx_binary,
+        documents_from_warc_binary,
+        read_warc_at_binary,
+        read_warc_binary,
+    )
+
+    def record(warc_type: str, payload: bytes, uri: str | None = None) -> bytes:
+        head = f"{_WARC_VERSION}\r\nWARC-Type: {warc_type}\r\n"
+        if uri:
+            head += f"WARC-Target-URI: {uri}\r\n"
+        head += f"WARC-Date: 2000-01-01T00:00:00Z\r\nContent-Length: {len(payload)}\r\n\r\n"
+        return head.encode("latin-1") + payload + b"\r\n\r\n"
+
+    pages = {
+        "http://f.test/a.html": b'<html><body><a href="/b.html">b</a></body></html>',
+        "http://f.test/b.html": b"<html><body>leaf</body></html>",
+    }
+    records = [record("warcinfo", b"software: other-crawler\r\nformat: WARC\r\n")]
+    for url, body in pages.items():
+        records.append(record("request", b"GET / HTTP/1.1\r\nHost: f.test\r\n\r\n", url))
+        records.append(
+            _render_record_bytes(url, 0, 200, "text/html", body, "2000-01-01T00:00:00Z")
+        )
+        records.append(record("metadata", b"fetchTimeMs: 12\r\n", url))
+    arc = tmp_path / "arc"
+    arc.mkdir()
+    with open(arc / "foreign.warc.gz", "wb") as f:
+        for rec in records:  # one gzip member per record, Common Crawl style
+            obj = zlib.compressobj(9, zlib.DEFLATED, 31)
+            f.write(obj.compress(rec) + obj.flush())
+
+    read = {r["url"]: bytes(r["body"]) for r in read_warc_binary(spark, str(arc)).collect()}
+    assert read == pages
+    cdx = build_cdx_binary(spark, str(arc))
+    assert sorted(r["url"] for r in cdx.collect()) == sorted(pages)
+    ranged = {r["url"]: bytes(r["body"]) for r in read_warc_at_binary(spark, cdx).collect()}
+    assert ranged == pages
+    docs = documents_from_warc_binary(spark, str(arc), num_partitions=4).collect()
+    assert sorted(r["url"] for r in docs) == sorted(pages)
